@@ -7,7 +7,7 @@ import scala.jdk.CollectionConverters._
 import graft.model.CqlSchema
 import graft.token.Murmur3Token
 import graft.write.TokenSortedWriter
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession, SQLContext}
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
@@ -100,40 +100,10 @@ class GraftDataSource extends TableProvider with DataSourceRegister
     p
   }
 
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
-    val spark = SparkSession.active
-    // tolerate a missing path: the write path resolves the table before the
-    // first file exists (DataFrameWriter.save → getTableFromProvider), and
-    // the returned schema is unused by the V1 write fallback
-    // strip engine columns: `_graft_token`, and `graft_p_*` directory-key
-    // TWINS of real data columns (see WriteConf.partitionBy) — partition
-    // inference surfaces the twins, but the data column itself lives in
-    // every file; the table schema is the file schema. Only strip a
-    // graft_p_X whose data column X actually exists (the twin invariant) —
-    // a user column that merely happens to carry the prefix must stay
-    // visible.
-    def strip(full: StructType): StructType = {
-      val names = full.fields.map(_.name).toSet
-      val prefix = TokenSortedWriter.partCol("")
-      StructType(full.fields.filterNot(f => f.name == TokenSortedWriter.TokenCol
-        || (f.name.startsWith(prefix) && names.contains(f.name.substring(prefix.length)))))
-    }
-    try {
-      // mergeSchema: appends may evolve the schema (e.g. a later write adds
-      // the writetime/TTL feature columns) — the union schema is the table
-      strip(spark.read.option("mergeSchema", "true").parquet(pathOf(options)).schema)
-    } catch {
-      case _: org.apache.spark.sql.AnalysisException =>
-        // a compacted-in-place table keeps its data under `gen-<uuid>/`
-        // subdirs, which plain parquet partition discovery rejects (non
-        // key=value dir names) — recursiveFileLookup sees the files and
-        // skips discovery; dir-partitioned (key=value) tables never reach
-        // this fallback, so graft_p twin stripping above still governs them
-        try strip(spark.read.option("mergeSchema", "true")
-          .option("recursiveFileLookup", "true").parquet(pathOf(options)).schema)
-        catch { case _: org.apache.spark.sql.AnalysisException => new StructType() }
-    }
-  }
+  // the listing-cache entry's schema: no Spark job and no walk beyond the
+  // fingerprint when the table is unchanged (TokenPruner.Schemas)
+  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
+    TokenPruner.schemas(SparkSession.active, pathOf(options)).table
 
   override def getTable(
       schema: StructType,
@@ -960,13 +930,17 @@ class GraftScan(
   private def effectivePushed: Array[Filter] = pushed ++ runtime
 
   @volatile private var listedCount: Int = -1
+  /** Statuses of the listed files, from the same listing as [[prunedFiles]]. */
+  @volatile private var listedStatuses = Map.empty[String, FileStatus]
 
   /** All data files, then token/key-stat pruned against pushed + runtime
    *  pk filters (cache invalidated when runtime filters arrive). */
   private def prunedFiles: Array[TokenPruner.FileMeta] = {
     var files = cachedPruned
     if (files == null) {
-      val listed = TokenPruner.listFiles(spark, dir)
+      val entry = TokenPruner.listing(spark, dir)
+      val listed = entry.files
+      listedStatuses = entry.statuses
       // snapshot resolution BEFORE any pruning: explicit pin → that version;
       // unpinned but the table has a log → latest snapshot (a live listing
       // can hold a half-landed batch or both generations of a rewrite);
@@ -1114,7 +1088,7 @@ class GraftScan(
           Seq.empty // all positioned
         else prunedFiles.map(_.path).filterNot(dvMap.contains).toSeq
       d = ParquetScanBridge.parquetBatch(
-        spark, paths, fullFileSchema, parquetRequired, physPushed)
+        spark, paths, fullFileSchema, parquetRequired, physPushed, listedStatuses)
       cachedDelegate = d
     }
     d
@@ -1131,7 +1105,7 @@ class GraftScan(
           prunedFiles.map(_.path).toSeq
         else prunedFiles.map(_.path).filter(dvMap.contains).toSeq
       d = ParquetScanBridge.parquetBatch(
-        spark, paths, fullFileSchema, positionedParquetRequired, Array.empty)
+        spark, paths, fullFileSchema, positionedParquetRequired, Array.empty, listedStatuses)
       cachedPosBatch = d
     }
     d
@@ -1367,43 +1341,69 @@ object TokenPruner {
   // fingerprint (child name/kind/mtime/len — which covers every mutation our
   // writer can make: new root files, new partition dirs, and, crucially,
   // `_graft_manifest/` and `_graft_deletes/` whose mtimes bump on every
-  // write/delete because a new file lands directly inside them). Deep
-  // EXTERNAL edits that change nothing at the root level are the documented
-  // blind spot — use [[invalidateListing]] after out-of-band surgery.
-  private val listingCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, Array[FileMeta])]()
+  // write/delete because a new file lands directly inside them). An entry
+  // carries everything derived from one fingerprint: the data files with
+  // their planning stats, the `_graft_deletes/` children the fingerprint
+  // already enumerates, and — memoized on first use — the table schema and
+  // the tombstone schema, so a warm read infers its schema and finds its
+  // tombstones with no Spark job and no second walk. Deep EXTERNAL edits
+  // that change nothing at the root level are the documented blind spot,
+  // for the schemas as for the files — use [[invalidateListing]] after
+  // out-of-band surgery, or `graft.listing.cache=false`.
+  private[graft] final class Listing(
+      val sig: String,
+      val files: Array[FileMeta],
+      /** Hadoop status of every walked data file, by path: the scan hands
+       *  them to Spark's file index, which then lists nothing. */
+      val statuses: Map[String, FileStatus],
+      /** `_graft_deletes/` children; None when the table has no such dir. */
+      val deletes: Option[Array[FileStatus]],
+      /** The walk skipped an entry Spark's own file listing reads (a `_k=v`
+       *  dir, a summary file, a non-parquet file) or read one Spark skips:
+       *  the two listings disagree, so footer-derived schemas decline. */
+      val mismatch: Boolean,
+      val cached: Boolean) {
+    /** Memoized schemas by kind and parquet-conversion conf; None = the
+     *  kind is absent (a table without tombstones). */
+    val schemas = new java.util.concurrent.ConcurrentHashMap[String, Option[StructType]]()
+  }
+
+  private val listingCache = new java.util.concurrent.ConcurrentHashMap[String, Listing]()
   /** Number of full recursive walks performed (observable by specs). */
   private[graft] val fullWalks = new java.util.concurrent.atomic.AtomicLong(0)
 
   def invalidateListing(dir: String): Unit = listingCache.remove(dir)
 
-  private def listingSignature(fs: org.apache.hadoop.fs.FileSystem, p: Path): String =
+  /** The root fingerprint and, when the listing succeeded, the
+   *  `_graft_deletes/` children it enumerated (inner None = no such dir). */
+  private def listingSignature(fs: org.apache.hadoop.fs.FileSystem, p: Path)
+      : (String, Option[Option[Array[FileStatus]]]) =
     try {
-      def level(d: Path): String =
-        fs.listStatus(d).sortBy(_.getPath.getName)
-          .map(s => s"${s.getPath.getName}:${s.isDirectory}:${s.getModificationTime}:${s.getLen}")
+      def render(ss: Array[FileStatus]): String =
+        ss.map(s => s"${s.getPath.getName}:${s.isDirectory}:${s.getModificationTime}:${s.getLen}")
           .mkString("|")
       val root = fs.listStatus(p).sortBy(_.getPath.getName)
-      val rootSig = root
-        .map(s => s"${s.getPath.getName}:${s.isDirectory}:${s.getModificationTime}:${s.getLen}")
-        .mkString("|")
       // dir mtimes have finite granularity, so two writes inside one tick
       // could alias at the root level — but every writer mutation creates a
       // UNIQUELY-NAMED file inside the manifest/deletes dirs, so enumerating
       // those two children (still O(1) round trips) makes the signature
       // change-proof for all engine-driven mutations
-      val metaSig = root.filter(s => s.isDirectory &&
+      val meta = root.filter(s => s.isDirectory &&
           (s.getPath.getName == graft.write.Manifest.Dir ||
             s.getPath.getName == TokenSortedWriter.DeletesDir))
-        .map(s => s"[${s.getPath.getName}]" + level(s.getPath)).mkString("§")
-      rootSig + "§§" + metaSig
-    } catch { case _: java.io.IOException => s"unlistable-${System.nanoTime()}" }
+        .map(s => s.getPath.getName -> fs.listStatus(s.getPath).sortBy(_.getPath.getName))
+      val metaSig = meta.map { case (n, ss) => s"[$n]" + render(ss) }.mkString("§")
+      (render(root) + "§§" + metaSig,
+        Some(meta.collectFirst { case (TokenSortedWriter.DeletesDir, ss) => ss }))
+    } catch { case _: java.io.IOException => (s"unlistable-${System.nanoTime()}", None) }
 
   /** All data files with their planning stats: manifest rows when available,
    *  footer reads (bounded parallel) only for unknown files. Listing is
    *  recursive, skipping `_`/`.`-prefixed metadata dirs and files; a warm
    *  scan of an unchanged table costs ONE `listStatus` round-trip total. */
-  def listFiles(spark: SparkSession, dir: String): Array[FileMeta] = {
+  def listFiles(spark: SparkSession, dir: String): Array[FileMeta] = listing(spark, dir).files
+
+  private[graft] def listing(spark: SparkSession, dir: String): Listing = {
     val conf = spark.sessionState.newHadoopConf()
     val p = new Path(dir)
     val fs = p.getFileSystem(conf)
@@ -1411,35 +1411,291 @@ object TokenPruner {
     // root level (the documented signature blind spot): session conf
     // `graft.listing.cache=false` forces a full walk on every scan.
     val cacheOn = spark.conf.getOption("graft.listing.cache").forall(_.toBoolean)
-    val sig = if (cacheOn) listingSignature(fs, p) else ""
+    val (sig, sigDeletes) = if (cacheOn) listingSignature(fs, p) else ("", None)
     if (cacheOn) {
       val cached = listingCache.get(dir)
-      if (cached != null && cached._1 == sig) return cached._2
+      if (cached != null && cached.sig == sig) return cached
     }
     fullWalks.incrementAndGet()
-    val files = listDataFiles(fs, p)
+    val (files, mismatch) = walkDataFiles(fs, p)
     val manifest = graft.write.Manifest.read(fs, p)
     val (known, unknown) = files.partition(f => manifest.contains(f.getPath.toString))
     val fromManifest = known.map(f => manifest(f.getPath.toString))
     val fromFooters = readFootersParallel(conf, unknown.map(f => (f.getPath, f.getLen)))
-    val result = fromManifest ++ fromFooters
+    val deletes = sigDeletes.getOrElse {
+      try Some(fs.listStatus(new Path(p, TokenSortedWriter.DeletesDir)))
+      catch { case _: java.io.FileNotFoundException => None }
+    }
+    val result = new Listing(sig, fromManifest ++ fromFooters,
+      files.map(f => f.getPath.toString -> f).toMap, deletes, mismatch, cacheOn)
     if (cacheOn) {
       if (listingCache.size() > 64) listingCache.clear() // bound driver state
-      listingCache.put(dir, (sig, result))
+      listingCache.put(dir, result)
     }
     result
   }
 
-  def listDataFiles(fs: org.apache.hadoop.fs.FileSystem, p: Path): Array[org.apache.hadoop.fs.FileStatus] = {
-    def hidden(name: String): Boolean = name.startsWith("_") || name.startsWith(".")
-    def walk(d: Path): Array[org.apache.hadoop.fs.FileStatus] =
-      fs.listStatus(d).filterNot(s => hidden(s.getPath.getName)).flatMap { s =>
-        if (s.isDirectory) walk(s.getPath)
-        else if (s.getPath.getName.endsWith(".parquet")) Array(s)
-        else Array.empty[org.apache.hadoop.fs.FileStatus]
+  def listDataFiles(fs: org.apache.hadoop.fs.FileSystem, p: Path): Array[FileStatus] =
+    walkDataFiles(fs, p)._1
+
+  private def hidden(name: String): Boolean = name.startsWith("_") || name.startsWith(".")
+
+  /** Entries Spark's own file listing reads (`InMemoryFileIndex
+   *  .shouldFilterOutPathName`): not `_`/`.`-prefixed, except `k=v` and
+   *  summary names; never an in-flight `._COPYING_` copy. */
+  private def sparkListed(name: String): Boolean =
+    !((name.startsWith("_") && !name.contains("=")) || name.startsWith(".") ||
+      name.endsWith("._COPYING_")) ||
+      name.startsWith("_common_metadata") || name.startsWith("_metadata")
+
+  /** The recursive data-file walk, plus whether Spark's own listing of
+   *  the same tree would read an entry this walk skips, or skip one it
+   *  reads — found with no extra IO, from the entries the walk lists. */
+  private def walkDataFiles(fs: org.apache.hadoop.fs.FileSystem, p: Path)
+      : (Array[FileStatus], Boolean) = {
+    var mismatch = false
+    def walk(d: Path): Array[FileStatus] =
+      fs.listStatus(d).flatMap { s =>
+        val name = s.getPath.getName
+        val ours = !hidden(name) && (s.isDirectory || name.endsWith(".parquet"))
+        if (ours != sparkListed(name)) mismatch = true
+        if (hidden(name)) Array.empty[FileStatus]
+        else if (s.isDirectory) walk(s.getPath)
+        else if (name.endsWith(".parquet")) Array(s)
+        else Array.empty[FileStatus]
       }
-    walk(p)
+    (walk(p), mismatch)
   }
+
+  // ---- table and tombstone schemas, from the listing-cache entry ---------
+
+  /** A table's schemas, resolved lazily against ONE listing-cache entry —
+   *  a warm call costs the fingerprint and nothing else, so a normalized
+   *  read that needs both pays one. On a miss each is merged from per-file
+   *  footer schemas read in-process (zero Spark jobs, [[mergedFooterSchema]]);
+   *  only layouts where that merge cannot be shown to equal Spark's
+   *  inference run Spark's own. A missing or unlistable dir infers Spark's
+   *  way. */
+  final class Schemas private[TokenPruner] (spark: SparkSession, dir: String) {
+    private val entry: Option[Listing] =
+      try Some(listing(spark, dir)) catch { case _: java.io.IOException => None }
+
+    /** What `spark.read.option("mergeSchema", "true").parquet(dir)` infers,
+     *  minus engine columns: the schema the graft source reports for a
+     *  table it reads without a catalog (empty for a missing dir — the
+     *  write path resolves the table before its first file exists). */
+    lazy val table: StructType = entry match {
+      case Some(e) => memo(spark, e, "table")(e =>
+        footerTableSchema(spark, dir, e).orElse(Some(sparkTableSchema(spark, dir)))).get
+      case None => sparkTableSchema(spark, dir)
+    }
+
+    /** The union schema of every `_graft_deletes/` file — partition, row
+     *  and range tombstones carry different columns — or None when the
+     *  table has no tombstones (no such dir, or an empty one). */
+    lazy val tombstones: Option[StructType] = {
+      val del = new Path(dir, TokenSortedWriter.DeletesDir).toString
+      entry match {
+        case Some(e) => memo(spark, e, "tombstones") { e =>
+          if (!e.deletes.exists(_.exists(s => sparkListed(s.getPath.getName)))) None
+          else tombstoneParts(e)
+            .flatMap(ps => mergedFooterSchema(spark, ps.map(_.getPath.toString).toSeq, e.cached))
+            .orElse(Some(sparkInferred(spark, del)))
+        }
+        case None =>
+          val p = new Path(del)
+          if (!p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)) None
+          else Some(sparkInferred(spark, del))
+      }
+    }
+
+    /** Every tombstone under `_graft_deletes/`, read under [[tombstones]]
+     *  (a file lacking a column reads it as null) — the one tombstone
+     *  reader. Built from the part files the fingerprint listed when the
+     *  dir holds only those (the read lists nothing), else through Spark's
+     *  own listing of the dir. None when the table has no tombstones. */
+    def tombstoneFrame: Option[org.apache.spark.sql.DataFrame] = tombstones.map { s =>
+      val del = new Path(dir, TokenSortedWriter.DeletesDir)
+      entry.flatMap(tombstoneParts).filter(_.nonEmpty) match {
+        case Some(parts) =>
+          val qualified = del.getFileSystem(spark.sessionState.newHadoopConf()).makeQualified(del)
+          ParquetScanBridge.parquetFrame(spark, qualified, parts, s)
+        case None => spark.read.schema(s).parquet(del.toString)
+      }
+    }
+  }
+
+  def schemas(spark: SparkSession, dir: String): Schemas = new Schemas(spark, dir)
+
+  /** The `_graft_deletes/` part files the fingerprint listed, or None when
+   *  Spark would read something there that is not a plain part file (a
+   *  subdir, a summary or foreign file) — then Spark lists and infers. */
+  private def tombstoneParts(entry: Listing): Option[Array[FileStatus]] = {
+    val seen = entry.deletes.getOrElse(Array.empty[FileStatus])
+      .filter(s => sparkListed(s.getPath.getName))
+    val parts = seen.filter(s => s.isFile && !hidden(s.getPath.getName) &&
+      s.getPath.getName.endsWith(".parquet"))
+    if (parts.length == seen.length) Some(parts) else None
+  }
+
+  /** The footer-derived schemas alone (None where they decline) next to
+   *  Spark's own inference of the same dir — for differential specs. */
+  private[graft] def footerTableSchema(spark: SparkSession, dir: String): Option[StructType] =
+    footerTableSchema(spark, dir, listing(spark, dir))
+  private[graft] def footerTombstoneSchema(spark: SparkSession, dir: String): Option[StructType] =
+    tombstoneParts(listing(spark, dir))
+      .flatMap(ps => mergedFooterSchema(spark, ps.map(_.getPath.toString).toSeq))
+  private[graft] def sparkTombstoneSchema(spark: SparkSession, dir: String): StructType =
+    sparkInferred(spark, new Path(dir, TokenSortedWriter.DeletesDir).toString)
+
+  private def memo(spark: SparkSession, entry: Listing, kind: String)(
+      compute: Listing => Option[StructType]): Option[StructType] = {
+    val conf = spark.sessionState.conf
+    val key = kind + "|" + org.apache.spark.sql.graftshim.GraftShims.footerSchemaConfKey(conf) +
+      "|" + conf.isParquetSchemaRespectSummaries
+    val hit = entry.schemas.get(key)
+    if (hit != null) hit
+    else { val v = compute(entry); entry.schemas.put(key, v); v }
+  }
+
+  /** Spark's own inference of a parquet dir, with schema merging. */
+  private def sparkInferred(spark: SparkSession, dir: String): StructType =
+    spark.read.option("mergeSchema", "true").parquet(dir).schema
+
+  /** Strip engine columns: `_graft_token`, and `graft_p_*` directory-key
+   *  TWINS of real data columns (see WriteConf.partitionBy) — partition
+   *  inference surfaces the twins, but the data column itself lives in
+   *  every file; the table schema is the file schema. Only a graft_p_X
+   *  whose data column X actually exists is a twin — a user column that
+   *  merely carries the prefix stays visible. */
+  private def stripEngineColumns(full: StructType): StructType = {
+    val names = full.fields.map(_.name).toSet
+    val prefix = TokenSortedWriter.partCol("")
+    StructType(full.fields.filterNot(f => f.name == TokenSortedWriter.TokenCol
+      || (f.name.startsWith(prefix) && names.contains(f.name.substring(prefix.length)))))
+  }
+
+  /** The decline path: Spark's own `mergeSchema` inference of the table
+   *  dir (one listing and one footer-merge Spark job), stripped. */
+  private[graft] def sparkTableSchema(spark: SparkSession, dir: String): StructType =
+    try stripEngineColumns(sparkInferred(spark, dir))
+    catch {
+      case _: org.apache.spark.sql.AnalysisException =>
+        // a compacted-in-place table keeps its data under `gen-<uuid>/`
+        // subdirs, which plain parquet partition discovery rejects (non
+        // key=value dir names) — recursiveFileLookup sees the files and
+        // skips discovery; dir-partitioned (key=value) tables never reach
+        // this fallback, so graft_p twin stripping above still governs them
+        try stripEngineColumns(spark.read.option("mergeSchema", "true")
+          .option("recursiveFileLookup", "true").parquet(dir).schema)
+        catch { case _: org.apache.spark.sql.AnalysisException => new StructType() }
+    }
+
+  /** [[sparkTableSchema]]'s result from the entry's footers, or None when
+   *  the layout is not one where the two provably agree. Spark's result is
+   *  the merge of the footers of the files its listing reads, plus the
+   *  directory keys its partition discovery finds, then stripped. That
+   *  merge is [[mergedFooterSchema]] over the entry's files when:
+   *  - the walk and Spark's listing agree on every entry (no `_k=v` dir,
+   *    summary file or non-parquet file), the path is not a glob, and
+   *    summary-only merging is off;
+   *  - and the files sit in one of three shapes:
+   *    - all at the root (no partition discovery);
+   *    - none at the root, all under `graft_p_X=…` chains with one key
+   *      sequence, each X a data column (the keys are twins, stripped);
+   *    - none at the root and no `=` in any dir name (`gen-*` dirs: the
+   *      discovery finds no root file, and the recursive retry reads all).
+   *  Anything else — a root file beside subdirs, a non-twin key, mixed
+   *  chains, conflicting types — returns None. */
+  private def footerTableSchema(spark: SparkSession, dir: String, entry: Listing)
+      : Option[StructType] = {
+    if (entry.mismatch || dir.exists("{}[]*?\\".contains(_)) ||
+        spark.sessionState.conf.isParquetSchemaRespectSummaries) return None
+    val p = new Path(dir)
+    val root = p.getFileSystem(spark.sessionState.newHadoopConf()).makeQualified(p).toString + "/"
+    val paths = entry.files.map(_.path).toSeq
+    if (!paths.forall(_.startsWith(root))) return None
+    val dirs = paths.map(_.substring(root.length).split('/').toSeq.init)
+    val prefix = TokenSortedWriter.partCol("")
+    val keyChains = dirs.map(_.map(seg => if (seg.contains('=')) Some(seg.takeWhile(_ != '=')) else None))
+    val twins: Seq[String] =
+      if (dirs.forall(_.isEmpty)) Nil
+      else if (dirs.exists(_.isEmpty)) return None
+      else if (keyChains.forall(_.forall(_.isEmpty))) Nil
+      else if (keyChains.forall(_.forall(_.exists(_.startsWith(prefix)))) &&
+          keyChains.distinct.size == 1) keyChains.head.flatten
+      else return None
+    mergedFooterSchema(spark, paths, entry.cached).filter { merged =>
+      twins.forall { k =>
+        merged.fieldNames.contains(k.substring(prefix.length)) &&
+          !merged.fieldNames.exists(_.equalsIgnoreCase(k))
+      }
+    }.map(stripEngineColumns)
+  }
+
+  /** Session-scoped file→schema cache: data files are immutable once
+   *  written (generational names), so a footer's schema pins for the JVM's
+   *  lifetime, keyed with the conversion flags so two sessions with
+   *  different parquet settings never share a converted schema. Bounded
+   *  like the listing cache: cleared past 100k files. */
+  private val footerSchemaCache =
+    new java.util.concurrent.ConcurrentHashMap[String, StructType]()
+
+  /** Spark's `mergeSchema` inference over an explicit file set, from
+   *  in-process footer reads — ZERO Spark jobs. Each footer converts
+   *  exactly as Spark's does ([[org.apache.spark.sql.graftshim.GraftShims
+   *  .footerSchema]]), the schemas fold with Spark's own merge in path
+   *  order (Spark sorts the files it merges), and every level turns
+   *  nullable as in the relation Spark builds. `cached = false` re-reads
+   *  every footer (the listing cache is off: files may change out of
+   *  band). None when the schemas conflict or a footer cannot be read —
+   *  the caller falls back to Spark's inference and its errors. */
+  private[graft] def mergedFooterSchema(
+      spark: SparkSession, files: Seq[String], cached: Boolean = true): Option[StructType] = {
+    val conf = spark.sessionState.newHadoopConf()
+    // capture the session's SQLConf HERE (calling thread) — pool threads
+    // may not inherit the active session, and the converter's flags
+    // (binaryAsString, int96, NTZ inference, …) come from it
+    val sqlConf = spark.sessionState.conf
+    val confKey = org.apache.spark.sql.graftshim.GraftShims.footerSchemaConfKey(sqlConf)
+    val sorted = files.distinct.sorted
+    try {
+      val read: Map[String, StructType] = inParallel(
+        sorted.filterNot(p => cached && footerSchemaCache.containsKey(p + "|" + confKey))) { p =>
+        p -> org.apache.spark.sql.graftshim.GraftShims.footerSchema(conf, sqlConf, new Path(p))
+      }.toMap
+      if (cached && read.nonEmpty) {
+        if (footerSchemaCache.size() > 100000) footerSchemaCache.clear()
+        read.foreach { case (p, s) => footerSchemaCache.put(p + "|" + confKey, s) }
+      }
+      // a concurrent clear can drop a hit between the check and here: null
+      // then declines to Spark's inference
+      val schemas = sorted.map(p => read.getOrElse(p, footerSchemaCache.get(p + "|" + confKey)))
+      if (schemas.contains(null)) return None
+      // a repeated schema merges to what is already there: fold distinct
+      // ones, in first-seen order
+      schemas.distinct.reduceOption((a, b) => org.apache.spark.sql.graftshim.GraftShims
+          .mergeSchemas(a, b, sqlConf.caseSensitiveAnalysis))
+        .orElse(Some(new StructType()))
+        .map(org.apache.spark.sql.graftshim.GraftShims.asNullable)
+    } catch {
+      // one transient FS hiccup, an unreadable footer or a type conflict
+      // must not fail the read here: Spark's inference decides (task
+      // retries and its own error messages included)
+      case scala.util.control.NonFatal(_) => None
+    }
+  }
+
+  /** `f` over `xs` on a bounded thread pool (inline for one item). */
+  private def inParallel[A, B](xs: Seq[A])(f: A => B): Seq[B] =
+    if (xs.length <= 1) xs.map(f)
+    else {
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(math.min(16, xs.length))
+      try {
+        val tasks = xs.map(x => new java.util.concurrent.Callable[B] { def call(): B = f(x) })
+        pool.invokeAll(tasks.asJava).asScala.map(_.get()).toSeq
+      } finally pool.shutdown()
+    }
 
   /** FileMetas for snapshot-referenced files OUTSIDE the table root — a
    *  SHALLOW CLONE's view of its source's data. The clone's own manifest
@@ -1520,25 +1776,12 @@ object TokenPruner {
   private[graft] def readFootersParallel(
       conf: org.apache.hadoop.conf.Configuration,
       files: Array[(Path, Long)],
-      tolerant: Boolean = false): Array[FileMeta] = {
-    if (files.isEmpty) return Array.empty
-    def readOne(p: Path, l: Long): Option[FileMeta] =
+      tolerant: Boolean = false): Array[FileMeta] =
+    inParallel(files.toSeq) { case (p, l) =>
       if (!tolerant) Some(readFooterMeta(conf, p, l))
       else try Some(readFooterMeta(conf, p, l))
       catch { case _: java.io.FileNotFoundException => None }
-    if (files.length == 1)
-      return files.flatMap { case (p, l) => readOne(p, l) }
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(math.min(16, files.length))
-    try {
-      import scala.jdk.CollectionConverters._
-      val tasks = files.toSeq.map { case (p, l) =>
-        new java.util.concurrent.Callable[Option[FileMeta]] {
-          override def call(): Option[FileMeta] = readOne(p, l)
-        }
-      }
-      pool.invokeAll(tasks.asJava).asScala.flatMap(_.get()).toArray
-    } finally pool.shutdown()
-  }
+    }.flatten.toArray
 
   def readFooterMeta(
       conf: org.apache.hadoop.conf.Configuration, path: Path, len: Long): FileMeta = {

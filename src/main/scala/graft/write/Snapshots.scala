@@ -1314,10 +1314,12 @@ object Snapshots {
    *    compaction folds ("fold") contribute NOTHING — every key resolves
    *    identically across them by their commit contract.
    *
-   * Returns None when the walk cannot be trusted (intermediate version
-   * files vacuumed, a candidate data file gone from disk, or a pre-fold-tag
-   * legacy rewrite commit that cannot be told apart from CoW DML) — the
-   * caller must fall back to the full-state diff. Tombstones are NOT
+   * A pre-fold-tag legacy rewrite commit cannot be told apart from CoW
+   * DML, so it contributes its full added AND removed sets — sound, but
+   * possibly the whole table. Returns None when the walk cannot be trusted
+   * (intermediate version files vacuumed, or a candidate data file gone
+   * from disk) — the caller must fall back to the full-state diff.
+   * Tombstones are NOT
    * covered here: they live outside the version log and apply to both
    * pinned states symmetrically unless the caller time-scopes them (the
    * caller handles that case; see TokenSortedWriter.diffRows).

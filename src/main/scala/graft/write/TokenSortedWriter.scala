@@ -603,7 +603,10 @@ object TokenSortedWriter {
       keepFeatureColumns: Boolean = false,
       snapshotVersion: Option[String] = None,
       tombstonesAsOfMicros: Option[Long] = None): DataFrame = {
-    val reader = spark.read.format("graft")
+    // table and tombstone schemas from ONE listing-cache fingerprint: a
+    // warm read infers neither with a Spark job
+    val schemas = graft.sources.TokenPruner.schemas(spark, path)
+    val reader = spark.read.format("graft").schema(schemas.table)
       .option("path", path)
       .option("pk", schema.partitionKeys.mkString(","))
       .option("ck", schema.clusteringKeys.mkString(","))
@@ -643,10 +646,7 @@ object TokenSortedWriter {
     // 2. tombstones — partition-level (pk only) and row-level (pk + ck)
     // coexist in one _graft_deletes dir; a merged read distinguishes them by
     // null ck columns (ck is part of a primary key, never legitimately null)
-    val delPath = new org.apache.hadoop.fs.Path(path, DeletesDir)
-    val fs = delPath.getFileSystem(spark.sessionState.newHadoopConf())
-    if (fs.exists(delPath)) {
-      val deletesAll = spark.read.option("mergeSchema", "true").parquet(delPath.toString)
+    schemas.tombstoneFrame.foreach { deletesAll =>
       // time-scoped tombstones: a PINNED state reconstruction (diffRows'
       // from-side) must not let deletes that landed AFTER the pin
       // retro-erase rows the downstream consumer synced before the delete
@@ -658,7 +658,7 @@ object TokenSortedWriter {
       }
       val pk = schema.partitionKeys
       // range tombstones are marked by a non-null ck bound; split them off
-      // before the point-tombstone dispatch (mergeSchema gives every row the
+      // before the point-tombstone dispatch (every row reads under the
       // union schema, so the other kinds see null bounds)
       val hasRange = deletes0.columns.contains(CkMinCol) || deletes0.columns.contains(CkMaxCol)
       val isRange =
@@ -854,13 +854,8 @@ object TokenSortedWriter {
             // they cancel and contribute no candidates)
             val tombs: Option[DataFrame] =
               if (fromTombstoneHorizonMicros.isEmpty) None
-              else {
-                val tPath = new Path(dir, DeletesDir)
-                val tfs = tPath.getFileSystem(spark.sessionState.newHadoopConf())
-                if (!tfs.exists(tPath)) None
-                else Some(spark.read.parquet(tPath.toString)
-                  .select(parts.map(qcol): _*))
-              }
+              else graft.sources.TokenPruner.schemas(spark, dir).tombstoneFrame
+                .map(_.select(parts.map(qcol): _*))
             val all = (touched.toSeq ++ tombs.toSeq).reduceOption(_ unionByName _)
             Some(all.getOrElse(from.select(parts.map(qcol): _*).limit(0))
               .distinct())

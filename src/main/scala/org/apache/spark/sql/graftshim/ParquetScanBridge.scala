@@ -1,6 +1,6 @@
 package org.apache.spark.sql.graftshim
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{BlockLocation, FileStatus, LocatedFileStatus, Path}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.connector.read.{Batch, VariantExtraction}
 import org.apache.spark.sql.execution.datasources.{FileStatusCache, InMemoryFileIndex}
@@ -39,13 +39,15 @@ object ParquetScanBridge {
       files: Seq[String],
       dataSchema: StructType,
       readSchema: StructType,
-      filters: Array[Filter]): Batch = {
+      filters: Array[Filter],
+      known: Map[String, FileStatus] = Map.empty): Batch = {
     val index = new InMemoryFileIndex(
       spark,
       files.map(new Path(_)),
       Map.empty,
       Some(dataSchema),
-      FileStatusCache.getOrCreate(spark),
+      if (known.isEmpty) FileStatusCache.getOrCreate(spark)
+      else new KnownFiles(spark, known.map { case (p, st) => p -> Array(st) }),
       None,
       None)
     ParquetScan(
@@ -61,5 +63,56 @@ object ParquetScanBridge {
       Nil,
       Nil,
       Array.empty[VariantExtraction]).toBatch
+  }
+
+  /** `spark.read.schema(schema).parquet(dir)` over a directory whose
+   *  visible data files the caller already listed: the relation takes
+   *  `files` instead of listing `dir` (no existence probe either). */
+  def parquetFrame(
+      spark: SparkSession,
+      dir: Path,
+      files: Array[FileStatus],
+      schema: StructType): org.apache.spark.sql.DataFrame = {
+    val index = new InMemoryFileIndex(spark, Seq(dir), Map.empty, Some(schema),
+      new KnownFiles(spark, Map(dir.toString -> files)), None, None)
+    spark.baseRelationToDataFrame(org.apache.spark.sql.execution.datasources.HadoopFsRelation(
+      index, new StructType(), schema, None,
+      new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat,
+      Map.empty)(spark))
+  }
+
+  /** Leaf files the caller already listed (the graft listing walk), by
+   *  the path the index would list: the index takes them instead of
+   *  listing, with block locations attached the way Spark's own listing
+   *  attaches them (`HadoopFSUtils.listLeafFiles`); any other path lists
+   *  as usual. */
+  private final class KnownFiles(spark: SparkSession, known: Map[String, Array[FileStatus]])
+      extends FileStatusCache {
+    private val conf = spark.sessionState.newHadoopConf()
+    private val ignoreLocality = spark.sessionState.conf.ignoreDataLocality
+
+    override def getLeafFiles(path: Path): Option[Array[FileStatus]] =
+      known.get(path.toString).map(_.map(located))
+
+    override def putLeafFiles(path: Path, files: Array[FileStatus]): Unit = ()
+
+    override def invalidateAll(): Unit = ()
+
+    private def located(f: FileStatus): FileStatus = f match {
+      case l: LocatedFileStatus => l
+      case _ if ignoreLocality => f
+      case _ =>
+        val locations = f.getPath.getFileSystem(conf).getFileBlockLocations(f, 0, f.getLen)
+          .map { loc =>
+            if (loc.getClass == classOf[BlockLocation]) loc
+            else new BlockLocation(loc.getNames, loc.getHosts, loc.getOffset, loc.getLength)
+          }
+        // the long constructor: the short one reads permissions, which
+        // spawns a process per file on the raw local filesystem
+        val lfs = new LocatedFileStatus(f.getLen, f.isDirectory, f.getReplication,
+          f.getBlockSize, f.getModificationTime, 0, null, null, null, null, f.getPath, locations)
+        if (f.isSymlink) lfs.setSymlink(f.getSymlink)
+        lfs
+    }
   }
 }

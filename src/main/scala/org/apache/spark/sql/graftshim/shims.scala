@@ -50,6 +50,20 @@ object GraftShims {
     finally reader.close()
   }
 
+  /** Spark's own schema merge (`StructType.merge`, `private[sql]`): the
+   *  fold `mergeSchema` inference applies to per-file schemas. Throws on
+   *  incompatible types, exactly as Spark's inference does. */
+  def mergeSchemas(
+      a: org.apache.spark.sql.types.StructType,
+      b: org.apache.spark.sql.types.StructType,
+      caseSensitive: Boolean): org.apache.spark.sql.types.StructType =
+    a.merge(b, caseSensitive)
+
+  /** Every level nullable (`private[spark]`): what a file relation makes
+   *  of its inferred data schema before any read sees it. */
+  def asNullable(s: org.apache.spark.sql.types.StructType): org.apache.spark.sql.types.StructType =
+    s.asNullable
+
   /** The SQLConf flags [[footerSchema]]'s conversion depends on, as a
    *  cache-key fragment — sessions differing in any of them must not
    *  share converted schemas. */

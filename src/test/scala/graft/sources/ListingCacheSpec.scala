@@ -5,6 +5,7 @@ import java.nio.file.Files
 import graft.SparkSpec
 import graft.model.CqlSchema
 import graft.write.TokenSortedWriter
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.functions._
 
@@ -15,6 +16,35 @@ import org.apache.spark.sql.functions._
 class ListingCacheSpec extends SparkSpec {
 
   private val schema = CqlSchema("t", Seq("id"))
+
+  /** Spark jobs this thread submits while `body` runs. Jobs carry the
+   *  thread's local properties; a fence job submitted afterwards is
+   *  delivered after every earlier one (the listener bus is FIFO), so
+   *  the count is final once the fence arrives. */
+  private def jobsDuring(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val key = "graft.spec.jobGate"
+    val token = java.util.UUID.randomUUID().toString
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        Option(js.properties).flatMap(p => Option(p.getProperty(key))).foreach(seen.add)
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(key, token)
+      try body finally sc.setLocalProperty(key, null)
+      sc.setLocalProperty(key, "fence")
+      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty(key, null)
+      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+      while (!seen.contains("fence") && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(seen.contains("fence"), "listener never saw the fence job")
+      seen.toArray.count(_ == token)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  private def load(dir: String) =
+    spark.read.format("graft").option("path", dir).option("pk", "id").load()
 
   test("warm listings hit the cache; writes invalidate; results stay fresh") {
     val dir = Files.createTempDirectory("graft_cache_").toString + "/t"
@@ -174,5 +204,97 @@ class ListingCacheSpec extends SparkSpec {
     }
     assert(e.getMessage.contains("vacuumed"),
       s"stale manifest rows must surface the clone-specific refusal: $e")
+  }
+
+  test("warm reads build and plan with ZERO Spark jobs: a graft load and a " +
+      "readNormalized over partition and row tombstones") {
+    import spark.implicits._
+    val cs = CqlSchema("t", Seq("id"), Seq("ck"))
+    val dir = Files.createTempDirectory("graft_jobgate_").toString + "/t"
+    val df = (1L to 200L).map(i => (i, (i % 4).toInt, i * 2)).toDF("id", "ck", "v")
+    TokenSortedWriter.write(df, cs, dir, SaveMode.Append,
+      TokenSortedWriter.WriteConf(numPartitions = 2, keepTokenColumn = true,
+        writetimeMicros = Some(10L)))
+    TokenSortedWriter.write(df.filter(col("id") <= 50L).withColumn("v", col("v") + 1), cs,
+      dir, SaveMode.Append, TokenSortedWriter.WriteConf(numPartitions = 1,
+        keepTokenColumn = true, writetimeMicros = Some(20L)))
+    TokenSortedWriter.writeDeletes(Seq(3L, 4L).toDF("id"), cs, dir, Some(30L))
+    TokenSortedWriter.writeDeletes(Seq((5L, 1)).toDF("id", "ck"), cs, dir, Some(30L),
+      rowLevel = true)
+    def build() = (load(dir).filter(col("id") === 7L),
+      TokenSortedWriter.readNormalized(spark, cs, dir).filter(col("id").isin(3L, 5L, 7L)))
+    // cold: fills the listing-cache entry, schemas included
+    val (coldLoad, coldNorm) = build()
+    assert(coldLoad.count() == 2L)
+    assert(coldNorm.count() == 1L, "id 3 partition-deleted, row (5,1) deleted, 7 kept")
+    val jobs = jobsDuring {
+      val (warmLoad, warmNorm) = build()
+      warmLoad.queryExecution.executedPlan
+      warmNorm.queryExecution.executedPlan
+    }
+    assert(jobs == 0, s"warm build+plan ran $jobs Spark job(s)")
+    val (l, n) = build()
+    assert(l.count() == 2L && n.count() == 1L)
+  }
+
+  test("schema freshness: feature columns, tombstone columns, invalidation " +
+      "and graft.listing.cache=false") {
+    import spark.implicits._
+    val cs = CqlSchema("t", Seq("id"), Seq("ck"))
+    val dir = Files.createTempDirectory("graft_schemafresh_").toString + "/t"
+    val df = (1L to 20L).map(i => (i, (i % 3).toInt, i)).toDF("id", "ck", "v")
+    TokenSortedWriter.write(df, cs, dir, SaveMode.Append,
+      TokenSortedWriter.WriteConf(numPartitions = 1))
+    assert(load(dir).columns.toSeq == Seq("id", "ck", "v"))
+    // an append that adds writetime/TTL feature columns: the next read sees
+    // the union schema
+    TokenSortedWriter.write(df, cs, dir, SaveMode.Append, TokenSortedWriter.WriteConf(
+      numPartitions = 1, writetimeMicros = Some(5L), ttlSeconds = Some(100L)))
+    assert(load(dir).columns.toSet ==
+      Set("id", "ck", "v", TokenSortedWriter.WritetimeCol, TokenSortedWriter.ExpiresCol))
+    def tombs = TokenPruner.schemas(spark, dir).tombstones.map(_.fieldNames.toSet)
+    assert(tombs.isEmpty)
+    TokenSortedWriter.writeDeletes(Seq(1L).toDF("id"), cs, dir, Some(9L))
+    assert(tombs.contains(Set("id", TokenSortedWriter.WritetimeCol)))
+    // a row-level batch adds the ck column, a range batch the bound columns
+    TokenSortedWriter.writeDeletes(Seq((2L, 2)).toDF("id", "ck"), cs, dir, Some(9L),
+      rowLevel = true)
+    assert(tombs.contains(Set("id", "ck", TokenSortedWriter.WritetimeCol)))
+    TokenSortedWriter.writeRangeDeletes(Seq((3L, 0, 1)).toDF("id", "ck_min", "ck_max"),
+      cs, dir, Some(9L))
+    assert(tombs.contains(Set("id", "ck", TokenSortedWriter.WritetimeCol,
+      TokenSortedWriter.CkMinCol, TokenSortedWriter.CkMaxCol)))
+    val live = TokenSortedWriter.readNormalized(spark, cs, dir).select("id", "ck").distinct()
+      .as[(Long, Int)].collect().toSet
+    assert(!live.exists(_._1 == 1L) && !live.contains((2L, 2)) &&
+      !live.exists(r => r._1 == 3L && r._2 <= 1), "every tombstone kind applied")
+
+    // out-of-band: a data file with a new column lands two levels down —
+    // invisible to the warm entry (the documented blind spot) until
+    // invalidateListing, and always visible with the cache off
+    val pdir = Files.createTempDirectory("graft_schemafresh_p_").toString + "/t"
+    val pdf = Seq((1L, "x", "p", 1L), (2L, "x", "q", 2L)).toDF("id", "a", "b", "v")
+    TokenSortedWriter.write(pdf, schema, pdir, SaveMode.Append, TokenSortedWriter.WriteConf(
+      numPartitions = 1, keepTokenColumn = true, partitionBy = Seq("a", "b")))
+    val leaf = new java.io.File(pdir, s"${TokenSortedWriter.partCol("a")}=x/" +
+      s"${TokenSortedWriter.partCol("b")}=p")
+    assert(leaf.isDirectory)
+    assert(load(pdir).columns.toSet == Set("id", "a", "b", "v"))
+    def oob(c: String): Unit =
+      pdf.withColumn(c, lit(1)).coalesce(1).write.mode(SaveMode.Append).parquet(leaf.getPath)
+    oob("oob1")
+    assert(!load(pdir).columns.contains("oob1"), "warm entry: deep edit unseen")
+    spark.conf.set("graft.listing.cache", "false")
+    try {
+      val w0 = TokenPruner.fullWalks.get()
+      assert(load(pdir).columns.contains("oob1"), "cache off: schema recomputed")
+      oob("oob2")
+      assert(load(pdir).columns.contains("oob2"), "cache off: every read recomputes")
+      assert(TokenPruner.fullWalks.get() >= w0 + 2)
+    } finally spark.conf.unset("graft.listing.cache")
+    assert(!load(pdir).columns.contains("oob2"), "cache on again: the stale entry serves")
+    TokenPruner.invalidateListing(pdir)
+    assert(load(pdir).columns.toSet == Set("id", "a", "b", "v", "oob1", "oob2"),
+      "invalidateListing refreshes the schema")
   }
 }
